@@ -29,7 +29,7 @@ object JobProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // optional session-conf overrides for A/B probes:
-    // GRAFT_CONF="graft.iter.stepsPerPin=2,graft.x=y"
+    // GRAFT_CONF="graft.pathExpand.doublingMaxEdges=0,graft.x=y"
     sys.env.get("GRAFT_CONF").foreach(_.split(",").filter(_.contains("="))
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2)
@@ -57,8 +57,8 @@ object JobProbe {
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         val dt = (System.nanoTime() - t0) / 1e9
-        // listener events are async — give the bus a beat to drain
-        Thread.sleep(300)
+        // listener events are async — drain the bus before reading
+        org.apache.spark.sql.graftshim.ListenerBridge.waitUntilEmpty(spark, 10000L)
         println(f"[jobprobe] $name rep=$rep sec=$dt%.3f jobs=${jobs.get}" +
           s" stages=${stages.get} tasks=${tasks.get}")
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))

@@ -33,72 +33,51 @@ object Components {
     * materializes edges on the driver.
     */
   def connectedComponents(pairs: DataFrame, idCol1: String, idCol2: String,
-                          maxIter: Int = 25): DataFrame = {
-    // undirected edge list, deduped once and pinned for the loop
-    val und = IterPin.pin(pairs.select(col(idCol1).as("src"), col(idCol2).as("dst"))
-      .unionByName(pairs.select(col(idCol2).as("src"), col(idCol1).as("dst")))
-      .distinct())
+                          maxIter: Int = 25): DataFrame =
+    connectedComponents(pairs, idCol1, idCol2, maxIter, fuse = 2)
+
+  /** [[connectedComponents]] at an explicit fusion depth (see
+    * [[Fixpoint]]).
+    */
+  private[graft] def connectedComponents(pairs: DataFrame, idCol1: String,
+                                         idCol2: String, maxIter: Int,
+                                         fuse: Int): DataFrame = {
+    // undirected edge list, deduped once and pinned for the loop; the
+    // edge count that picks the regime rides the pin's own job
+    val (und, undRow) = IterPin.pinProbed(
+      pairs.select(col(idCol1).as("src"), col(idCol2).as("dst"))
+        .unionByName(pairs.select(col(idCol2).as("src"), col(idCol1).as("dst")))
+        .distinct(),
+      Seq(count(lit(1))))
 
     val driverCap = und.sparkSession.conf
       .get("graft.components.driverMaxEdges", "200000").toLong
-    if (und.count() <= driverCap) {
+    if (undRow.getLong(0) <= driverCap) {
       val r = driverUnionFind(und) // builds from collected longs
       IterPin.free(und)
       return r
     }
 
-    // convergence by MONOTONE SIGNATURE, folded into each round's pin
-    // (IterPin.pinProbed): every update is least()/min() over the
-    // current labels, so each comp is non-increasing — the label sum
-    // (exact DECIMAL, ids can be near Long.Max at 100 TB key spaces)
-    // is unchanged iff NO label changed. Replaces the old
-    // join-the-previous-vector probe: one job per round instead of
-    // two, and no second pass over the label vector.
-    val sigCol = sum(col("comp").cast("decimal(38,0)"))
-    def sigOf(r: org.apache.spark.sql.Row): java.math.BigDecimal =
-      if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
-    var (labels, labelsRow) = IterPin.pinProbed(
-      und.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("comp")), Seq(sigCol))
-    var signature = sigOf(labelsRow)
-
-    var converged = false
-    var it = 0
-    // step fusion (the GraphAlgos discipline): each round is pure
-    // min/least propagation, so consecutive rounds compose into one
-    // linear plan between pins — identical labels, and the monotone
-    // signature still detects a block-level fixpoint exactly (labels
-    // are non-increasing, so an unchanged sum across a fused block
-    // means NO round in the block moved a label). Fusion is capped at
-    // 2 here regardless of graft.iter.stepsPerPin: one round
-    // references the incoming label vector 4× (twice in `stepped`,
-    // `stepped` twice in the jump), so the un-materialized plan grows
-    // 4^steps — exchange reuse executes the duplicates once, but
-    // Catalyst still plans them, and past 2 rounds the planning cost
-    // outruns the saved materializations.
-    val fuse = math.min(2, IterPin.stepsPerPin(pairs.sparkSession, 2))
-    while (!converged && it < maxIter) {
-      val steps = math.min(fuse, maxIter - it)
-      var cur = labels
-      for (_ <- 1 to steps) {
-        // neighbour minimum
-        val nbrMin = und.join(cur, col("dst") === col("id"))
-          .groupBy(col("src")).agg(min(col("comp")).as("nbr"))
-        val stepped = cur.join(nbrMin, col("id") === col("src"), "left_outer")
-          .select(col("id"), least(col("comp"), coalesce(col("nbr"), col("comp"))).as("c1"))
-        // pointer jump: follow the label one more level
-        cur = stepped
-          .join(stepped.select(col("id").as("jid"), col("c1").as("jc")),
-            col("c1") === col("jid"), "left_outer")
-          .select(col("id"), coalesce(col("jc"), col("c1")).as("comp"))
-      }
-      val (next, nextRow) = IterPin.pinProbed(cur, Seq(sigCol))
-      val nextSig = sigOf(nextRow)
-      converged = nextSig.compareTo(signature) == 0
-      IterPin.free(labels) // superseded label vector
-      labels = next
-      signature = nextSig
-      it += steps
+    // convergence by MONOTONE SIGNATURE, folded into each round's pin:
+    // every update is least()/min() over the current labels, so each
+    // comp is non-increasing — the label sum (exact DECIMAL, ids can be
+    // near Long.Max at 100 TB key spaces) is unchanged across a block
+    // iff NO round in it moved a label.
+    val (labels, _) = Fixpoint.run(
+        und.select(col("src").as("id")).distinct()
+          .select(col("id"), col("id").as("comp")),
+        fuse, maxIter, probe = Seq(sum(col("comp").cast("decimal(38,0)"))),
+        pinSeed = true, stop = b => b.prev.contains(b.row)) { (cur, _) =>
+      // neighbour minimum
+      val nbrMin = und.join(cur, col("dst") === col("id"))
+        .groupBy(col("src")).agg(min(col("comp")).as("nbr"))
+      val stepped = cur.join(nbrMin, col("id") === col("src"), "left_outer")
+        .select(col("id"), least(col("comp"), coalesce(col("nbr"), col("comp"))).as("c1"))
+      // pointer jump: follow the label one more level
+      stepped
+        .join(stepped.select(col("id").as("jid"), col("c1").as("jc")),
+          col("c1") === col("jid"), "left_outer")
+        .select(col("id"), coalesce(col("jc"), col("c1")).as("comp"))
     }
     IterPin.free(und) // exit free — the final pinned labels read nothing
     labels

@@ -314,9 +314,9 @@ object Dedup {
       // documented fan-out trap). Engaged-cap only: the default-off
       // path stays zero-cost and pin-free (the streaming pin-flatness
       // arms run uncapped). Pinned through IterPin (checkpointDir
-      // routing + the graft.iter.free hatch) and FREED deterministically
-      // on the common path: hot buckets are outliers by construction
-      // (at most rows/cap of them), so the key set collects under the
+      // routing) and FREED deterministically on the common path: hot
+      // buckets are outliers by construction (at most rows/cap of
+      // them), so the key set collects under the
       // repo's 2M broadcast gate, the pin releases before return, and
       // the returned plan anti-joins against a BROADCAST local relation
       // instead of a pinned RDD scan.
@@ -382,7 +382,7 @@ object Dedup {
         // scan in the plan (a broadcast that size would be its own
         // hazard); this pin frees via the context cleaner once the
         // caller's materialization drops the plan — the one documented
-        // IterPin exemption (README graft.iter.free row)
+        // exemption from deterministic IterPin release
         banded.join(hot.select(keys.map(col): _*), keys, "left_anti")
       }
     }

@@ -54,7 +54,17 @@ object GraphAlgos {
                relative: Boolean = false,
                tolerance: Option[Double] = None,
                weightCol: Option[String] = None,
-               seeds: Option[Seq[Long]] = None): DataFrame = {
+               seeds: Option[Seq[Long]] = None): DataFrame =
+    pageRank(edges, iterations, damping, relative, tolerance, weightCol, seeds,
+      fuse = 2)
+
+  /** [[pageRank]] at an explicit fusion depth (see [[Fixpoint]]). */
+  private[graft] def pageRank(edges: DataFrame, iterations: Int,
+                              damping: Double, relative: Boolean,
+                              tolerance: Option[Double],
+                              weightCol: Option[String],
+                              seeds: Option[Seq[Long]],
+                              fuse: Int): DataFrame = {
     // weighted edges split a source's rank ∝ weight instead of evenly;
     // with unit weights sum(__w) is exactly the outdegree count, so the
     // unweighted results are bit-identical to the count formulation
@@ -91,70 +101,53 @@ object GraphAlgos {
         when(col("node").isin(s: _*), lit(1.0 / s.size)).otherwise(lit(0.0))
       case None => lit(1.0 / nN)
     }
-    var ranks = nodes.select(col("node"), teleport.as("rank"))
-    var it = 0
-    var converged = false
-    val fuse = IterPin.stepsPerPin(edges.sparkSession, 2)
-    while (it < iterations && !converged) {
-      // step fusion between materializations (the sssp/closeness
-      // fusion; depth 2 is the measured optimum for this loop — the
-      // contribution subplan is read twice per step, so deeper fusion
-      // doubles the un-pinned plan per step; see IterPin.stepsPerPin):
-      // the dangling scalar is IN-PLAN (a broadcast 1-row aggregate of
-      // the contribution table, not a driver collect), so consecutive
-      // iterations compose into one linear plan and the rank vector
-      // materializes once per `fuse` steps — same expressions,
-      // bit-identical ranks, a fraction of the checkpoint + scheduler
-      // floor. Within a fused
-      // step the contribution subplan has two readers (dangling mass +
-      // rank update); Catalyst's exchange reuse shares its shuffle, so
-      // the cost is one extra n-row hash aggregate, far below a
-      // materialization. Tolerance mode stays single-step: the stop
-      // rule compares CONSECUTIVE iterations.
-      val steps = if (tolerance.isDefined) 1 else math.min(fuse, iterations - it)
-      var cur = ranks
-      for (_ <- 1 to steps) {
-        val contrib = w.join(cur, Seq("node"))
-          .groupBy(col("dst").as("node"))
-          .agg(sum(col("rank") * col("__w") / col("outdeg")).as("s"))
-        // dangling mass by conservation: ranks always sum to exactly 1,
-        // and the contribution stream sums to the non-dangling mass
-        // (each source's rank/outdeg appears once per out-edge), so
-        // D = 1 - Σs — no second pass over the rank vector, no
-        // anti-join. fp error vs the explicit dangling sum is ~1 ulp,
-        // ~1e-21 per rank after the /n — invisible at any rounding
-        val dang = contrib
-          .agg((lit(1.0) - coalesce(sum(col("s")), lit(0.0))).as("dmass"))
-        val rankExpr = seeds match {
-          case Some(_) =>
-            lit(1.0 - damping) * teleport + lit(damping) *
-              (coalesce(col("s"), lit(0.0)) + col("dmass") * teleport)
-          case None =>
-            lit(base) + lit(damping) *
-              (coalesce(col("s"), lit(0.0)) + col("dmass") / nN)
+    // the dangling scalar is IN-PLAN (a broadcast 1-row aggregate of the
+    // contribution table, not a driver collect), so consecutive
+    // iterations compose into one linear plan between pins. Within a
+    // step the contribution subplan has two readers (dangling mass +
+    // rank update); Catalyst's exchange reuse shares its shuffle, so the
+    // cost is one extra n-row hash aggregate, far below a pin.
+    def iterate(cur: DataFrame): DataFrame = {
+      val contrib = w.join(cur, Seq("node"))
+        .groupBy(col("dst").as("node"))
+        .agg(sum(col("rank") * col("__w") / col("outdeg")).as("s"))
+      // dangling mass by conservation: ranks always sum to exactly 1,
+      // and the contribution stream sums to the non-dangling mass
+      // (each source's rank/outdeg appears once per out-edge), so
+      // D = 1 - Σs — no second pass over the rank vector, no
+      // anti-join. fp error vs the explicit dangling sum is ~1 ulp,
+      // ~1e-21 per rank after the /n — invisible at any rounding
+      val dang = contrib
+        .agg((lit(1.0) - coalesce(sum(col("s")), lit(0.0))).as("dmass"))
+      val rankExpr = seeds match {
+        case Some(_) =>
+          lit(1.0 - damping) * teleport + lit(damping) *
+            (coalesce(col("s"), lit(0.0)) + col("dmass") * teleport)
+        case None =>
+          lit(base) + lit(damping) *
+            (coalesce(col("s"), lit(0.0)) + col("dmass") / nN)
+      }
+      nodes.join(contrib, Seq("node"), "left")
+        .crossJoin(broadcast(dang))
+        .select(col("node"), rankExpr.as("rank"))
+    }
+    val seed = nodes.select(col("node"), teleport.as("rank"))
+    val (ranks, rounds) = tolerance match {
+      case None => Fixpoint.run(seed, fuse, iterations)((cur, _) => iterate(cur))
+      // the L∞ delta to the previous iteration (the standard
+      // power-iteration stop rule) rides each state row as __d, so the
+      // stop probe is folded into the pin's own job. Single-step: the
+      // rule compares CONSECUTIVE iterations. `iterations` stays the
+      // hard cap, so the fixed-iteration oracle form is tolerance=None.
+      case Some(tol) =>
+        Fixpoint.run(seed, 1, iterations, probe = Seq(max(col("__d"))),
+            stop = b => b.row.isNullAt(0) || b.row.getDouble(0) < tol) {
+          (cur, _) =>
+            iterate(cur)
+              .join(cur.select(col("node"), col("rank").as("__prev")), Seq("node"))
+              .select(col("node"), col("rank"),
+                abs(col("rank") - col("__prev")).as("__d"))
         }
-        cur = nodes.join(contrib, Seq("node"), "left")
-          .crossJoin(broadcast(dang))
-          .select(col("node"), rankExpr.as("rank"))
-      }
-      val next = IterPin.pin(cur)
-      // convergence is opt-in because the L∞ delta is one extra n-row
-      // join + max aggregate per iteration (a driver scalar, the
-      // standard power-iteration stop rule); `iterations` stays the
-      // hard cap either way, so the fixed-iteration oracle form is the
-      // tolerance=None default
-      tolerance.foreach { tol =>
-        val delta = next.join(ranks.withColumnRenamed("rank", "prev"), Seq("node"))
-          .agg(max(abs(col("rank") - col("prev"))).as("d"))
-          .head().getDouble(0)
-        converged = delta < tol
-      }
-      // the superseded rank vector's last consumer (the delta probe)
-      // has run and `next` is materialized — release its blocks now
-      // instead of letting every round's state pile up on the heap
-      IterPin.free(ranks)
-      ranks = next
-      it += steps
     }
     // exit frees: the returned frame reads only the FINAL pinned rank
     // vector, never the edge-sized loop pins — release them here so a
@@ -162,9 +155,9 @@ object GraphAlgos {
     // loop; a REPL session) doesn't accumulate one edge table per call
     // in the block manager waiting on GC-triggered cleanup
     IterPin.free(w)
-    if (it > 0) IterPin.free(nodes) // it==0 → ranks still reads nodes
+    if (rounds > 0) IterPin.free(nodes) // rounds==0 → ranks still reads nodes
     if (relative) ranks.select(col("node"), (col("rank") * nN).as("rank"))
-    else ranks
+    else ranks.select(col("node"), col("rank"))
   }
 
   /** k-core decomposition by iterative peeling (Seidman 1983; the
@@ -191,42 +184,28 @@ object GraphAlgos {
     * core whether or not it knows where the fixpoint fell. That is
     * what makes the fixed-unroll external-SQL oracle exact.
     */
-  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 12): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 12): DataFrame =
+    kCore(edges, k, maxRounds, fuse = 2)
+
+  /** [[kCore]] at an explicit fusion depth (see [[Fixpoint]]). */
+  private[graft] def kCore(edges: DataFrame, k: Int, maxRounds: Int,
+                           fuse: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    var (e, eRow) = IterPin.pinProbed(edges.select(col("src"), col("dst")),
-      Seq(count(lit(1))))
-    var nEdges = eRow.getLong(0)
-    var round = 0
-    var converged = nEdges == 0
-    val fuse = IterPin.stepsPerPin(edges.sparkSession, 2)
-    while (round < maxRounds && !converged) {
-      // step fusion between materializations (the pageRank/LPA/sssp
-      // fusion): one peel is a pure degree-filter + two semi joins, so
-      // consecutive peels compose into one linear plan. Edges only
-      // shrink and peeling is idempotent past the fixpoint, so an
-      // equal edge count after a fused block implies no step in the
-      // block changed anything — the convergence test and the
-      // fixed-unroll oracle are both unaffected.
-      val steps = math.min(fuse, maxRounds - round)
-      var cur = e
-      for (_ <- 1 to steps) {
+    // edges only shrink and peeling is idempotent past the fixpoint, so
+    // an unchanged edge count after a block means no peel in it changed
+    // anything; an empty edge set is a fixpoint before any peel
+    val (core, _) = Fixpoint.run(edges.select(col("src"), col("dst")),
+        fuse, maxRounds, probe = Seq(count(lit(1))), pinSeed = true,
+        stop = b => b.row.getLong(0) == b.prev.fold(0L)(_.getLong(0))) {
+      (cur, _) =>
         val keep = cur.groupBy(col("src")).agg(count(lit(1)).as("deg"))
           .filter(col("deg") >= k).select(col("src"))
-        cur = cur
+        cur
           .join(keep, Seq("src"), "left_semi")
           .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
           .select(col("src"), col("dst"))
-      }
-      // edge count folded into the pin's own job (IterPin.pinProbed)
-      val (next, nextRow) = IterPin.pinProbed(cur, Seq(count(lit(1))))
-      val nNext = nextRow.getLong(0)
-      converged = nNext == nEdges
-      IterPin.free(e) // superseded peel state — nothing references it
-      e = next
-      nEdges = nNext
-      round += steps
     }
-    e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+    core.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) with fully
@@ -244,32 +223,26 @@ object GraphAlgos {
     * per-node-partitioned ranking window (its partition size is the
     * number of DISTINCT neighbor labels, which shrinks every
     * iteration — never a global window). Labels are checkpointed once
-    * per TWO iterations (double-step fusion — the update is pure, so
-    * fused steps are label-identical) to keep the loop's plan linear
-    * at half the materializations.
+    * per FOUR iterations (step fusion — the update is pure, so fused
+    * steps are label-identical) to keep the loop's plan linear at a
+    * quarter of the materializations.
     *
     * Synchronous LPA can oscillate on bipartite structures (period-2
     * flips) — the documented trade for determinism; `iterations` caps
     * the loop either way.
     */
-  def labelPropagation(edges: DataFrame, iterations: Int = 3): DataFrame = {
+  def labelPropagation(edges: DataFrame, iterations: Int = 3): DataFrame =
+    labelPropagation(edges, iterations, fuse = 4)
+
+  /** [[labelPropagation]] at an explicit fusion depth (see [[Fixpoint]]). */
+  private[graft] def labelPropagation(edges: DataFrame, iterations: Int,
+                                      fuse: Int): DataFrame = {
     val e = IterPin.pin(edges.select(col("src"), col("dst")))
     val nodes = IterPin.pin(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
-    var labels = nodes.select(col("node"), col("node").as("label"))
-    var it = 0
-    // single-reference step → linear fused-plan growth → depth 4 is
-    // the measured optimum here (unlike the multi-ref loops; see
-    // IterPin.stepsPerPin)
-    val fuse = IterPin.stepsPerPin(edges.sparkSession, 4)
-    while (it < iterations) {
-      // the update is pure (join + count + argmax aggregate), so
-      // consecutive iterations fuse into one linear plan between
-      // checkpoints — identical labels, a fraction of the
-      // materializations (the pageRank/sssp step fusion)
-      val steps = math.min(fuse, iterations - it)
-      var cur = labels
-      for (_ <- 1 to steps) {
+    val (labels, rounds) = Fixpoint.run(
+        nodes.select(col("node"), col("node").as("label")), fuse, iterations) {
+      (cur, _) =>
         val counts = e.join(cur, e("src") === cur("node"))
           .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
         // winner = (count desc, label asc) as min(struct(-c, label)) —
@@ -283,17 +256,12 @@ object GraphAlgos {
         val won = counts.groupBy(col("dst"))
           .agg(min(struct((-col("c")).as("nc"), col("label").as("l"))).as("__m"))
           .select(col("dst").as("node"), col("__m.l").as("__new"))
-        cur = nodes.join(won, Seq("node"), "left")
+        nodes.join(won, Seq("node"), "left")
           .select(col("node"),
             coalesce(col("__new"), col("node")).as("label"))
-      }
-      val next = IterPin.pin(cur)
-      IterPin.free(labels) // superseded label vector
-      labels = next
-      it += steps
     }
     IterPin.free(e) // exit free — the final pinned labels read neither
-    if (it > 0) IterPin.free(nodes) // (it==0 → labels still reads nodes)
+    if (rounds > 0) IterPin.free(nodes) // (rounds==0 → labels still reads nodes)
     labels
   }
 
@@ -349,13 +317,18 @@ object GraphAlgos {
     * Scale shape: the weighted edge table is pinned once; each round
     * is one hash join moving the reached-set rows along edges plus one
     * map-side-combinable min per destination — no windows, no global
-    * ordering. Convergence is detected from two scalars ((count,
-    * sum(dist)) — relaxation never removes a node or increases a
-    * distance, so equality means fixpoint) rather than an EXCEPT join.
+    * ordering. Convergence is detected from one scalar folded into the
+    * pin's own job — the count of rows whose distance changed — rather
+    * than an EXCEPT join.
     * `maxRounds` caps hostile diameters; per-round frontier deltas are
     * the usual Pregel/GraphX shape re-expressed as DataFrame joins.
     */
-  def sssp(edges: DataFrame, seeds: DataFrame, maxRounds: Int = 15): DataFrame = {
+  def sssp(edges: DataFrame, seeds: DataFrame, maxRounds: Int = 15): DataFrame =
+    sssp(edges, seeds, maxRounds, fuse = 2)
+
+  /** [[sssp]] at an explicit fusion depth (see [[Fixpoint]]). */
+  private[graft] def sssp(edges: DataFrame, seeds: DataFrame, maxRounds: Int,
+                          fuse: Int): DataFrame = {
     val e = IterPin.pin(edges.select(col("src"), col("dst"),
       col("weight").cast("long").as("weight")))
     // FRONTIER-DELTA relaxation (round 21, guide §2.3 — shuffle fewer
@@ -373,51 +346,36 @@ object GraphAlgos {
     // extra exchange): a node is frontier iff it is newly reached
     // (no pre-round row → old-dist min over the tagged union is null)
     // or its new min beats its pre-round distance.
-    var (dist, seedRow) = IterPin.pinProbed(
-      seeds.select(col("node"), lit(0L).as("dist"), lit(true).as("__f")),
-      Seq(count(lit(1))))
-    var round = 0
-    var converged = seedRow.getLong(0) == 0L
-    val fuse = IterPin.stepsPerPin(edges.sparkSession, 2)
-    while (round < maxRounds && !converged) {
-      // fused relaxations per materialization: min-plus relaxation is
-      // associative, so composing steps between checkpoints yields
-      // bit-identical distances to single-stepping (the fixed-unroll
-      // oracle stays exact) while dividing the per-round materialize +
-      // scheduler cost by the fusion depth
-      val steps = math.min(fuse, maxRounds - round)
-      var cur = dist
-      for (_ <- 1 to steps) {
-        val frontier = cur.filter(col("__f"))
-        val offers = e.join(frontier, e("src") === frontier("node"))
-          .select(col("dst").as("node"), (col("dist") + col("weight")).as("dist"))
-        cur = cur.select(col("node"), col("dist"), lit(false).as("__n"))
-          .unionAll(offers.select(col("node"), col("dist"), lit(true).as("__n")))
-          .groupBy(col("node"))
-          .agg(min(col("dist")).as("dist"),
-            min(when(!col("__n"), col("dist"))).as("__od"))
-          .select(col("node"), col("dist"),
-            (col("__od").isNull || col("dist") < col("__od")).as("__f"))
-      }
-      // convergence probe folded into the pin's own job: fixpoint ⟺
-      // the block's LAST step changed nothing (zero frontier rows) —
-      // relaxation past a fixpoint stays a fixpoint, so earlier steps
-      // of the block are covered by induction. Same detection latency
-      // as the old cross-block (count, sum) signature (one block past
-      // the last change either way), but that trailing block's offers
-      // join now runs on an EMPTY frontier instead of the full reached
-      // set — the wasted block costs scheduler floor, not data.
-      val (next, sig) = IterPin.pinProbed(cur,
-        Seq(coalesce(sum(when(col("__f"), lit(1L)).otherwise(lit(0L))),
-          lit(0L))))
-      converged = sig.getLong(0) == 0L
-      IterPin.free(dist) // superseded distance vector
-      dist = next
-      round += steps
+    //
+    // fixpoint ⟺ the block's LAST step changed nothing (zero frontier
+    // rows) — relaxation past a fixpoint stays a fixpoint, so earlier
+    // steps of the block are covered by induction; the block past the
+    // last change runs its offers join on an EMPTY frontier, so it
+    // costs scheduler floor, not data
+    val (dist, _) = Fixpoint.run(
+        seeds.select(col("node"), lit(0L).as("dist"), lit(true).as("__f")),
+        fuse, maxRounds, probe = Seq(frontierRows), pinSeed = true,
+        stop = _.row.getLong(0) == 0L) { (cur, _) =>
+      val frontier = cur.filter(col("__f"))
+      val offers = e.join(frontier, e("src") === frontier("node"))
+        .select(col("dst").as("node"), (col("dist") + col("weight")).as("dist"))
+      cur.select(col("node"), col("dist"), lit(false).as("__n"))
+        .unionAll(offers.select(col("node"), col("dist"), lit(true).as("__n")))
+        .groupBy(col("node"))
+        .agg(min(col("dist")).as("dist"),
+          min(when(!col("__n"), col("dist"))).as("__od"))
+        .select(col("node"), col("dist"),
+          (col("__od").isNull || col("dist") < col("__od")).as("__f"))
     }
     IterPin.free(e) // exit free — the pinned distance vector reads nothing
     dist.select(col("node"), col("dist"))
   }
+
+  /** Rows whose distance changed in the last relaxation (sssp/BFS's
+    * convergence probe; a seed's rows all count).
+    */
+  private def frontierRows =
+    coalesce(sum(when(col("__f"), lit(1L)).otherwise(lit(0L))), lit(0L))
 
   /** Per-origin hop distances from a seed set — synchronous BFS with
     * (origin, node) state, the landmark-distance building block.
@@ -436,41 +394,24 @@ object GraphAlgos {
     // rows through the edge join EVERY round and moving each (origin,
     // node) exactly once, in its reach round (synchronous BFS never
     // improves a set distance).
-    var (dist, seedRow) = IterPin.pinProbed(
-      seeds.select(col("node").as("origin"), col("node"),
-        lit(0L).as("dist"), lit(true).as("__f")), Seq(count(lit(1))))
-    var round = 0
-    var converged = seedRow.getLong(0) == 0L
-    val fuse = IterPin.stepsPerPin(edges.sparkSession, 2)
-    while (round < maxRounds && !converged) {
-      // fused steps between checkpoints — same associativity argument
-      // as [[sssp]], identical distances, a fraction of the
-      // materializations
-      val steps = math.min(fuse, maxRounds - round)
-      var cur = dist
-      for (_ <- 1 to steps) {
-        val frontier = cur.filter(col("__f"))
-        val offers = frontier.join(e, frontier("node") === e("src"))
-          .select(col("origin"), col("dst").as("node"),
-            (col("dist") + 1).as("dist"))
-        cur = cur.select(col("origin"), col("node"), col("dist"),
-            lit(false).as("__n"))
-          .unionAll(offers.select(col("origin"), col("node"), col("dist"),
-            lit(true).as("__n")))
-          .groupBy(col("origin"), col("node"))
-          .agg(min(col("dist")).as("dist"),
-            min(when(!col("__n"), col("dist"))).as("__od"))
-          .select(col("origin"), col("node"), col("dist"),
-            (col("__od").isNull || col("dist") < col("__od")).as("__f"))
-      }
-      // zero-frontier fixpoint probe folded into the pin's own job
-      val (next, sig) = IterPin.pinProbed(cur,
-        Seq(coalesce(sum(when(col("__f"), lit(1L)).otherwise(lit(0L))),
-          lit(0L))))
-      converged = sig.getLong(0) == 0L
-      IterPin.free(dist) // superseded distance vector
-      dist = next
-      round += steps
+    val (dist, _) = Fixpoint.run(
+        seeds.select(col("node").as("origin"), col("node"),
+          lit(0L).as("dist"), lit(true).as("__f")),
+        fuse = 2, maxRounds = maxRounds, probe = Seq(frontierRows), pinSeed = true,
+        stop = _.row.getLong(0) == 0L) { (cur, _) =>
+      val frontier = cur.filter(col("__f"))
+      val offers = frontier.join(e, frontier("node") === e("src"))
+        .select(col("origin"), col("dst").as("node"),
+          (col("dist") + 1).as("dist"))
+      cur.select(col("origin"), col("node"), col("dist"),
+          lit(false).as("__n"))
+        .unionAll(offers.select(col("origin"), col("node"), col("dist"),
+          lit(true).as("__n")))
+        .groupBy(col("origin"), col("node"))
+        .agg(min(col("dist")).as("dist"),
+          min(when(!col("__n"), col("dist"))).as("__od"))
+        .select(col("origin"), col("node"), col("dist"),
+          (col("__od").isNull || col("dist") < col("__od")).as("__f"))
     }
     IterPin.free(e) // exit free — the pinned distance vector reads nothing
     dist.select(col("origin"), col("node"), col("dist"))

@@ -5,8 +5,9 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Checkpoint discipline for iterative operators (pageRank/LPA/k-core/
-  * sssp/BFS/components/path closure): every loop pins its per-round
-  * state with an EAGER checkpoint so the plan stays linear, and frees
+  * sssp/BFS/components/path closure, all driven by [[Fixpoint]]): every
+  * loop pins its per-round state with an EAGER checkpoint so the plan
+  * stays linear, and frees
   * the SUPERSEDED round's blocks once the successor is materialized —
   * without the free, every round's full state stays pinned in the
   * block manager until GC-triggered cleanup gets around to it, and on
@@ -45,39 +46,6 @@ private[graft] object IterPin {
 
   private val probeId = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Fused steps per materialization for the iterative loops
-    * (pageRank/LPA/k-core/sssp/BFS/components). Each loop composes up
-    * to this many pure update steps into ONE linear plan between
-    * checkpoints — bit-identical state by associativity/purity of the
-    * updates; what changes is bookkeeping: state materializes (and the
-    * convergence probe runs) once per BLOCK instead of once per step,
-    * so a converging loop can run up to `steps-1` extra update rounds
-    * past its fixpoint before the block-level signature sees it.
-    *
-    * `algoDefault` is the loop's MEASURED structural optimum, not a
-    * guess (round-21 regime table, OPTIMIZATION_r21.md): a step that
-    * references the incoming state MORE THAN ONCE (sssp/BFS's
-    * `cur ∪ offers(cur)`, pageRank's twice-read contribution table,
-    * k-core's three state reads per peel) duplicates the un-pinned
-    * subtree 2-3× per fused step — 2^k/3^k plan copies that Catalyst
-    * must plan and AQE must stage even where exchange reuse executes
-    * them once — so depth 4 REGRESSED those loops 20-40% (gr05 warm
-    * 5.1 s @2 vs 7.0 s @4; gr01 4.8 vs 6.6) while cutting jobs only
-    * ~20% (AQE schedules one job per exchange, and fusion does not
-    * remove exchanges). Single-reference steps grow linearly and do
-    * win at 4 (LPA 4.5 vs 4.9). `graft.iter.stepsPerPin` overrides
-    * uniformly for experiments or cluster regimes where the
-    * wasted-rounds-past-fixpoint trade differs (a past-fixpoint round
-    * moves no new rows through the aggregates, but it still re-scans
-    * the pinned state).
-    */
-  def stepsPerPin(spark: org.apache.spark.sql.SparkSession,
-                  algoDefault: Int): Int = {
-    val v = spark.conf.get("graft.iter.stepsPerPin", algoDefault.toString).toInt
-    require(v >= 1, s"graft.iter.stepsPerPin must be >= 1, got $v")
-    v
-  }
-
   /** [[pin]] plus the round's convergence probe IN THE SAME JOB: the
     * aggregate columns ride as a `Dataset.observe` node on the frame
     * being checkpointed, so the materialization action itself fills
@@ -98,17 +66,14 @@ private[graft] object IterPin {
     *    accumulator updates once per successful task per STAGE
     *    EXECUTION, so a retry after executor loss can double-apply a
     *    lost task's update. Local masters run no speculation and no
-    *    stage retries, so the observe route defaults ON only under
-    *    `local[*]`; non-local masters take the exact pin-then-agg
-    *    two-job probe unless `graft.iter.observeProbe=true` opts in
-    *    explicitly.
+    *    stage retries, so only `local[*]` takes the observe route;
+    *    non-local masters take the exact pin-then-agg two-job probe.
     *  - RELIABLE checkpointing (`graft.iter.checkpointDir` set):
     *    `Dataset.checkpoint()` on an unpersisted plan executes it
     *    TWICE (the eager count job, then the checkpoint write in
     *    `rdd.doCheckpoint()`), so every observed metric merges two
     *    full passes and reads 2x. That route always uses the exact
-    *    probe — even under an explicit observeProbe=true, because 2x
-    *    is not a risk but a certainty.
+    *    probe.
     *
     * Both routes return bit-identical metric VALUES when exact (same
     * aggregate expressions over the same rows); the observe route just
@@ -116,11 +81,8 @@ private[graft] object IterPin {
     */
   def pinProbed(df: DataFrame, metrics: Seq[org.apache.spark.sql.Column])
   : (DataFrame, org.apache.spark.sql.Row) = {
-    val conf = df.sparkSession.conf
-    val localMaster = df.sparkSession.sparkContext.master.startsWith("local")
-    val reliable = conf.getOption("graft.iter.checkpointDir").isDefined
-    val observe = !reliable &&
-      conf.get("graft.iter.observeProbe", localMaster.toString).toBoolean
+    val observe = df.sparkSession.sparkContext.master.startsWith("local") &&
+      df.sparkSession.conf.getOption("graft.iter.checkpointDir").isEmpty
     if (observe) {
       val name = s"__iterpin_probe_${probeId.incrementAndGet()}"
       val obs = df.observe(name, metrics.head, metrics.tail: _*)
@@ -151,21 +113,20 @@ private[graft] object IterPin {
     * recursive FS call on the round's own directory.
     */
   def free(df: DataFrame): Unit =
-    if (df.sparkSession.conf.get("graft.iter.free", "true").toBoolean)
-      df.queryExecution.logical match {
-        case lr: LogicalRDD =>
-          if (lr.rdd.getStorageLevel != StorageLevel.NONE)
-            lr.rdd.unpersist(blocking = false)
-          // reliable checkpoints report storage level NONE and live as
-          // files under checkpointDir/<uuid>/rdd-<id>; getCheckpointFile
-          // is Some only for the reliable kind, so the local route never
-          // enters here
-          lr.rdd.getCheckpointFile.foreach { dir =>
-            val p = new org.apache.hadoop.fs.Path(dir)
-            p.getFileSystem(
-                df.sparkSession.sparkContext.hadoopConfiguration)
-              .delete(p, true)
-          }
-        case _ => ()
-      }
+    df.queryExecution.logical match {
+      case lr: LogicalRDD =>
+        if (lr.rdd.getStorageLevel != StorageLevel.NONE)
+          lr.rdd.unpersist(blocking = false)
+        // reliable checkpoints report storage level NONE and live as
+        // files under checkpointDir/<uuid>/rdd-<id>; getCheckpointFile
+        // is Some only for the reliable kind, so the local route never
+        // enters here
+        lr.rdd.getCheckpointFile.foreach { dir =>
+          val p = new org.apache.hadoop.fs.Path(dir)
+          p.getFileSystem(
+              df.sparkSession.sparkContext.hadoopConfiguration)
+            .delete(p, true)
+        }
+      case _ => ()
+    }
 }

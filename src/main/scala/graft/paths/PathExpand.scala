@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.compiler.{ExpressionCompiler, Frame, NodeVar, PathVar, QueryCompiler}
 import graft.model.GraphCatalog
+import graft.operators.{Fixpoint, IterPin}
 import graft.parser.CypherAst._
 
 /** Variable-length path / shortestPath expansion as an iterative
@@ -150,7 +151,7 @@ object PathExpand {
     // edge count folded into the materialization job (IterPin.pinProbed)
     val (materialized, edgeCount) =
       if (loops) {
-        val (m, r) = graft.operators.IterPin.pinProbed(edges0,
+        val (m, r) = IterPin.pinProbed(edges0,
           Seq(count(lit(1))))
         (m, r.getLong(0))
       } else (edges0, 0L)
@@ -158,9 +159,11 @@ object PathExpand {
       .get("graft.pathExpand.broadcastThreshold", MaxBroadcastEdges.toString).toLong
     val coPartitioned = loops && edgeCount > threshold
     val edges =
-      if (coPartitioned)
-        materialized.repartition(nPart, col("__src")).localCheckpoint()
-      else materialized
+      if (coPartitioned) {
+        val p = IterPin.pin(materialized.repartition(nPart, col("__src")))
+        IterPin.free(materialized) // its last consumer was the pin above
+        p
+      } else materialized
 
     val startLabel = cur.vars(fromVar) match {
       case NodeVar(l, _, _) => Some(l)
@@ -183,11 +186,12 @@ object PathExpand {
     val walkCols = Seq(col("__origin"), col("__node"), col("__hops")) ++
       (if (matPaths) Seq(col("__nodes"), col("__edges")) else Seq.empty)
     def walkRows(f: DataFrame) = f.select(walkCols: _*)
+    // reached frontiers, each read by the returned plan (walkRows at the end)
     var results = Vector.empty[DataFrame]
     // A zero-length path means start and end are the SAME node, so it can
     // only contribute when the end label is the start label — otherwise an
     // id coincidence across label key spaces would fabricate matches.
-    if (minHops == 0 && startLabel.contains(endLabel)) results :+= walkRows(frontier)
+    if (minHops == 0 && startLabel.contains(endLabel)) results :+= frontier
 
     // BFS dedup is only valid when any reached hop >= minHops counts
     // (minHops <= 1); a minHops > 1 shortestPath must keep walks so a
@@ -217,50 +221,38 @@ object PathExpand {
       edgeCount <= math.min(doublingThreshold, threshold)
 
     if (doubling) {
-      val probe = Seq(count(lit(1)), coalesce(sum(col("__hops")), lit(0L)))
-      var (closure, closureRow) = graft.operators.IterPin.pinProbed(edges
-        .select(col("__src").as("__a"), col("__dst").as("__b"), lit(1L).as("__hops"))
-        .groupBy(col("__a"), col("__b")).agg(min(col("__hops")).as("__hops")),
-        probe)
-      var signature = (closureRow.getLong(0), closureRow.getLong(1))
-      var span = 1L
+      // row-cap AND fixpoint probe folded into each pin's own job: the
+      // closure is MONOTONE — union ∪ min never removes a pair (count
+      // non-decreasing) and never increases a pair's hops (sum
+      // non-increasing at fixed count) — so (count, sum(__hops))
+      // unchanged ⟺ no pair added and no hop improved, the exact
+      // fixpoint. (Count equality ALONE is not sufficient — a pair
+      // whose true distance exceeds the current horizon can hold a
+      // non-minimal path length that later rounds improve in place;
+      // the sum term catches exactly those in-place improvements.)
+      // Each round doubles the span, so ⌈log2 maxHops⌉ rounds cover it.
       var abandoned = false
-      var converged = false
-      while (span < maxHops && !abandoned && !converged) {
+      val (closure, _) = Fixpoint.run(edges
+          .select(col("__src").as("__a"), col("__dst").as("__b"), lit(1L).as("__hops"))
+          .groupBy(col("__a"), col("__b")).agg(min(col("__hops")).as("__hops")),
+          fuse = 1, maxRounds = 32 - Integer.numberOfLeadingZeros(maxHops - 1),
+          probe = Seq(count(lit(1)), coalesce(sum(col("__hops")), lit(0L))),
+          pinSeed = true,
+          stop = { b =>
+            abandoned = b.row.getLong(0) > closureRowCap
+            abandoned || b.prev.contains(b.row)
+          }) { (closure, _) =>
         val composed = closure.as("l")
           .join(closure.as("r"), col("l.__b") === col("r.__a"))
           .select(col("l.__a").as("__a"), col("r.__b").as("__b"),
             (col("l.__hops") + col("r.__hops")).as("__hops"))
           .filter(col("__hops") <= maxHops)
-        // row-cap AND fixpoint probe folded into the pin's own job:
-        // the closure is MONOTONE — union ∪ min never removes a pair
-        // (count non-decreasing) and never increases a pair's hops
-        // (sum non-increasing at fixed count) — so (count, sum(__hops))
-        // unchanged ⟺ no pair added and no hop improved, the exact
-        // fixpoint. (Count equality ALONE is not sufficient — a pair
-        // whose true distance exceeds the current horizon can hold a
-        // non-minimal path length that later rounds improve in place;
-        // the sum term catches exactly those in-place improvements.)
-        // Replaces the old per-round left_anti probe job.
-        val (next, nextRow) = graft.operators.IterPin.pinProbed(
-          closure.unionByName(composed)
-            .groupBy(col("__a"), col("__b")).agg(min(col("__hops")).as("__hops")),
-          probe)
-        if (nextRow.getLong(0) > closureRowCap) abandoned = true
-        else {
-          val nextSig = (nextRow.getLong(0), nextRow.getLong(1))
-          converged = nextSig == signature
-          // superseded closure: its last consumer (the composed join)
-          // has run; each round's closure is the full pair set, so
-          // retention across log2(maxHops) rounds is the doubling
-          // regime's dominant memory term
-          graft.operators.IterPin.free(closure)
-          closure = next
-          signature = nextSig
-          span *= 2
-        }
+        closure.unionByName(composed)
+          .groupBy(col("__a"), col("__b")).agg(min(col("__hops")).as("__hops"))
       }
-      if (!abandoned) {
+      // an abandoned closure is dead weight while the frontier loop runs
+      if (abandoned) IterPin.free(closure)
+      else {
         var dist = startIds.join(closure, col("__origin") === col("__a"))
           .select(col("__origin"), col("__b").as("__node"), col("__hops"))
           .filter(col("__hops") >= minHops)
@@ -271,9 +263,10 @@ object PathExpand {
         // coincidence would fabricate the exact match the 0-hop guard
         // exists to prevent.
         if (minHops == 0) dist = dist.filter(col("__origin") =!= col("__node"))
-        val collapsed = (results :+ dist).reduce(_ unionByName _)
+        val collapsed = (results.map(walkRows) :+ dist).reduce(_ unionByName _)
           .groupBy(col("__origin"), col("__node"))
           .agg(min(col("__hops")).as("__hops"))
+        IterPin.free(edges) // the closure pin is all the result reads
         return finishSegment(qc, cur, fromVar, collapsed, endVar,
           cyclic, endLabel, endNode)
       }
@@ -296,9 +289,39 @@ object PathExpand {
       .get("graft.pathExpand.maxTotalRows", "50000000").toLong
     var totalRows = 0L
 
-    var hop = 1
-    var exhausted = false
-    while (hop <= maxHops && !exhausted) {
+    // fuse 1: every hop's row count gates the explosion caps, and its
+    // frontier joins the result (and the BFS visited set) before the
+    // next hop runs. In the co-partitioned (large-edge) regime the
+    // frontier is partitioned on __node so the next hop's join probes
+    // the pre-partitioned edge table with no exchange on either side
+    // (the BFS dedup's grouping keys are a superset of __node, so it
+    // reuses the same partitioning); skipped on the last hop, where the
+    // partitioning would never be consumed. The remaining per-round
+    // cost at local scale is the Spark scheduling floor (~2 stages/hop),
+    // which is exactly what buys horizontal scale-out on a cluster.
+    val (last, _) = Fixpoint.run(frontier, fuse = 1, maxRounds = maxHops,
+        probe = Seq(count(lit(1))), retained = f => results.contains(f),
+        stop = { b =>
+          val frontierRows = b.row.getLong(0)
+          frontierRows == 0 || {
+            totalRows += frontierRows
+            if (frontierRows > frontierCap || totalRows > totalCap)
+              throw new IllegalStateException(
+                s"path expansion exploded at hop ${b.rounds}: frontier=$frontierRows " +
+                  s"(cap $frontierCap), accumulated=$totalRows (cap $totalCap) — " +
+                  "tighten the hop range/pattern or raise " +
+                  "graft.pathExpand.maxFrontierRows / maxTotalRows")
+            if (b.rounds >= minHops) results :+= b.state
+            // allShortest frontiers carry one row per WITNESS; the visited
+            // set needs one per (origin, node) or it grows with multiplicity
+            if (bfs) visited = visited.unionByName(
+              if (allPaths)
+                b.state.select(col("__origin"), col("__node"))
+                  .dropDuplicates("__origin", "__node")
+              else b.state.select(col("__origin"), col("__node")))
+            false
+          }
+        }) { (frontier, hop) =>
       // trail mode: relationship uniqueness — a hop may not reuse an
       // edge already on this path; the extended path records the edge
       // it took. Materialization appends the reached node the same way.
@@ -341,46 +364,18 @@ object PathExpand {
           else next.dropDuplicates("__origin", "__node")
         next = next.join(visited, Seq("__origin", "__node"), "left_anti")
       }
-      // flat lineage; materializes the early-stop probe. In the
-      // co-partitioned (large-edge) regime the frontier is partitioned
-      // on __node so the next hop's join probes the pre-partitioned
-      // edge table with no exchange on either side (the BFS dedup's
-      // grouping keys are a superset of __node, so it reuses the same
-      // partitioning); skipped on the last hop, where the partitioning
-      // would never be consumed. The remaining per-round cost at local
-      // scale is the Spark scheduling floor (~2 stages/hop), which is
-      // exactly what buys horizontal scale-out on a cluster.
-      // early-stop/cap probe folded into the checkpoint's own job
-      val (pinned, pinnedRow) = graft.operators.IterPin.pinProbed(
-        if (coPartitioned && hop < maxHops)
-          next.repartition(nPart, col("__node"))
-        else next, Seq(count(lit(1))))
-      frontier = pinned
-      val frontierRows = pinnedRow.getLong(0)
-      if (frontierRows == 0) exhausted = true
-      else {
-        totalRows += frontierRows
-        if (frontierRows > frontierCap || totalRows > totalCap)
-          throw new IllegalStateException(
-            s"path expansion exploded at hop $hop: frontier=$frontierRows " +
-              s"(cap $frontierCap), accumulated=$totalRows (cap $totalCap) — " +
-              "tighten the hop range/pattern or raise " +
-              "graft.pathExpand.maxFrontierRows / maxTotalRows")
-        if (hop >= minHops) results :+= walkRows(frontier)
-        // allShortest frontiers carry one row per WITNESS; the visited
-        // set needs one per (origin, node) or it grows with multiplicity
-        if (bfs) visited = visited.unionByName(
-          if (allPaths)
-            frontier.select(col("__origin"), col("__node"))
-              .dropDuplicates("__origin", "__node")
-          else frontier.select(col("__origin"), col("__node")))
-      }
-      hop += 1
+      if (coPartitioned && hop < maxHops) next.repartition(nPart, col("__node"))
+      else next
     }
-
+    // the loop frees superseded frontiers the result does not read; the
+    // exhausted (empty) last one goes too unless it is all there is
     val reached =
-      if (results.isEmpty) walkRows(frontier).limit(0)
-      else results.reduce(_ unionByName _)
+      if (results.isEmpty) walkRows(last).limit(0)
+      else {
+        if (!results.contains(last)) IterPin.free(last)
+        results.map(walkRows).reduce(_ unionByName _)
+      }
+    IterPin.free(edges) // the result reads frontier pins, never the edges
 
     val collapsed = shortest match {
       // BFS already yields each (origin, node) exactly once (lex-min

@@ -13,20 +13,14 @@ import graft.operators.{IterPin, Par}
 class OptimizationInternalsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("pinProbed returns the same metrics row as pin-then-agg, both conf routes") {
+  test("pinProbed returns the same metrics row as pin-then-agg") {
+    // the exact pin-then-agg route is covered by the checkpointDir test
     val df = Seq((1L, 10L), (2L, 20L), (3L, 12L)).toDF("node", "dist")
     val metrics = Seq(count(lit(1)), coalesce(sum(col("dist")), lit(0L)))
     val (p1, r1) = IterPin.pinProbed(df, metrics)
     assert(r1.getLong(0) == 3L && r1.getLong(1) == 42L)
     assert(p1.collect().toSet == df.collect().toSet)
     IterPin.free(p1)
-    // fallback route must agree
-    spark.conf.set("graft.iter.observeProbe", "false")
-    try {
-      val (p2, r2) = IterPin.pinProbed(df, metrics)
-      assert(r2.getLong(0) == 3L && r2.getLong(1) == 42L)
-      IterPin.free(p2)
-    } finally spark.conf.unset("graft.iter.observeProbe")
   }
 
   test("pinProbed under graft.iter.checkpointDir takes the exact probe " +
@@ -34,9 +28,6 @@ class OptimizationInternalsSpec extends SparkSpec {
        "would read 2x)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     spark.conf.set("graft.iter.checkpointDir", dir)
-    // even an explicit observe opt-in must NOT win: 2x under the
-    // reliable route is a certainty, not a retry risk
-    spark.conf.set("graft.iter.observeProbe", "true")
     try {
       val df = Seq((1L, 10L), (2L, 20L), (3L, 12L)).toDF("node", "dist")
       val (p, r) = IterPin.pinProbed(df,
@@ -47,12 +38,11 @@ class OptimizationInternalsSpec extends SparkSpec {
       IterPin.free(p)
     } finally {
       spark.conf.unset("graft.iter.checkpointDir")
-      spark.conf.unset("graft.iter.observeProbe")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
   }
 
-  test("iterative step fusion is result-identical across stepsPerPin 1/2/4") {
+  test("iterative step fusion is result-identical at depths 1/2/4") {
     import graft.operators.{Components, GraphAlgos}
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
       (2L, 1L), (3L, 2L), (4L, 3L), (5L, 4L), (6L, 5L), (7L, 8L), (8L, 7L),
@@ -62,25 +52,24 @@ class OptimizationInternalsSpec extends SparkSpec {
       .toDF("src", "dst")
     val wedges = edges.withColumn("weight", (col("src") + col("dst")) % 5 + 1)
     val seeds = Seq(1L).toDF("node")
-    def runAll(): (Set[org.apache.spark.sql.Row], Set[org.apache.spark.sql.Row],
+    def runAll(fuse: Int): (Set[org.apache.spark.sql.Row], Set[org.apache.spark.sql.Row],
                    Set[org.apache.spark.sql.Row], Set[org.apache.spark.sql.Row],
                    Set[org.apache.spark.sql.Row]) = (
-      GraphAlgos.pageRank(edges, iterations = 5).collect().toSet,
-      GraphAlgos.labelPropagation(edges, iterations = 3).collect().toSet,
-      GraphAlgos.sssp(wedges, seeds, maxRounds = 15).collect().toSet,
-      GraphAlgos.kCore(edges, k = 2, maxRounds = 12).collect().toSet,
+      GraphAlgos.pageRank(edges, 5, 0.85, false, None, None, None, fuse = fuse)
+        .collect().toSet,
+      GraphAlgos.labelPropagation(edges, 3, fuse = fuse).collect().toSet,
+      GraphAlgos.sssp(wedges, seeds, 15, fuse = fuse).collect().toSet,
+      GraphAlgos.kCore(edges, 2, 12, fuse = fuse).collect().toSet,
       locally {
         // force the distributed label-propagation loop (not union-find)
         spark.conf.set("graft.components.driverMaxEdges", "0")
-        try Components.connectedComponents(edges, "src", "dst").collect().toSet
+        try Components.connectedComponents(edges, "src", "dst", 25, fuse = fuse)
+          .collect().toSet
         finally spark.conf.unset("graft.components.driverMaxEdges")
       })
-    val perSteps = Seq("1", "2", "4").map { s =>
-      spark.conf.set("graft.iter.stepsPerPin", s)
-      try runAll() finally spark.conf.unset("graft.iter.stepsPerPin")
-    }
-    assert(perSteps(0) == perSteps(1), "stepsPerPin 1 vs 2 diverged")
-    assert(perSteps(1) == perSteps(2), "stepsPerPin 2 vs 4 diverged")
+    val perDepth = Seq(1, 2, 4).map(runAll)
+    assert(perDepth(0) == perDepth(1), "fusion depth 1 vs 2 diverged")
+    assert(perDepth(1) == perDepth(2), "fusion depth 2 vs 4 diverged")
   }
 
   test("Par.spreadPinned materializes a fired spread once, identity otherwise") {
